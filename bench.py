@@ -475,7 +475,7 @@ def compact_line(detail: dict, headline: list[str], detail_path: str) -> str:
         fallback["queries"] = named
         if len(json.dumps(fallback, separators=(",", ":"))) > LINE_BUDGET:
             del named[name]
-            break
+            continue
     fallback["queries"] = named
     candidates.append(fallback)
     for cand in candidates:

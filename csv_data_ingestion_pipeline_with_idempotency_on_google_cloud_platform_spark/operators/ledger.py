@@ -173,11 +173,17 @@ def compact_ledger(spark: SparkSession, ledger_dir: str) -> int:
 def point_lookup(ledger: DataFrame, upload_id: str) -> DataFrame:
     """F3: ``get-upload-status?upload_id=X`` (README.md:48-52).
 
-    Equality predicate → Catalyst pushes it into the Parquet scan
-    (min/max row-group skipping); on a date-partitioned ledger this also
-    prunes partitions.
+    The key's latest transition as a top-1 over its filtered rows
+    (`orderBy(ts desc).limit(1)`, planned as TakeOrderedAndProject): no
+    shuffle, one Spark job. Same columns as `latest_wins`; an unknown key
+    returns no rows. The equality predicate is pushed into the Parquet
+    scan (min/max row-group skipping).
     """
-    return latest_wins(ledger.filter(F.col("upload_id") == F.lit(upload_id)))
+    return (
+        ledger.filter(F.col("upload_id") == F.lit(upload_id))
+        .orderBy(F.col("ts").desc())
+        .limit(1)
+    )
 
 
 def list_uploads(ledger: DataFrame, status: str | None = None, limit: int = 10) -> DataFrame:

@@ -23,7 +23,7 @@ At 100 TB scale the batch reader splits large CSVs across tasks
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -52,31 +52,45 @@ def read_csv_dir(
     return reader.csv(path)
 
 
-def read_csv_file_metadata(spark: SparkSession, path: str) -> DataFrame:
-    """File-granularity metadata view: one row per CSV file.
+def file_lines(text: DataFrame) -> DataFrame:
+    """Per-line rows of a `text` scan (batch or streaming) with the
+    identity triple the reference fetches per blob (main.py:43-47):
+    (bucket_name, file_name, file_size, time_created) plus `line`.
 
-    Columns mirror the triple the reference fetches per blob
-    (main.py:43-47): (bucket_name, file_name, file_size, time_created).
-    Uses Spark's `_metadata` hidden column on a text scan — the file is
-    listed, not parsed, and content is read once line-wise for counting
-    downstream.
+    `_metadata.file_path`/`file_name` are URI-encoded (a space is `%20`,
+    `%` is `%25`), and so is the derived `bucket_name`; decode them with
+    `uri_decoded` once per file, after the per-file aggregation.
     """
-    df = (
-        spark.read.format("text")
-        .load(path)
-        .select(
-            F.col("_metadata.file_path").alias("full_path"),
-            F.col("_metadata.file_name").alias("file_name"),
-            F.col("_metadata.file_size").alias("file_size"),
-            F.col("_metadata.file_modification_time").alias("time_created"),
-            F.col("value").alias("line"),
-        )
+    df = text.select(
+        F.col("_metadata.file_path").alias("full_path"),
+        F.col("_metadata.file_name").alias("file_name"),
+        F.col("_metadata.file_size").alias("file_size"),
+        F.col("_metadata.file_modification_time").alias("time_created"),
+        F.col("value").alias("line"),
     )
     # bucket_name := parent directory (object-store bucket stand-in)
     return df.withColumn(
         "bucket_name",
         F.element_at(F.split(F.col("full_path"), "/"), -2),
     )
+
+
+def uri_decoded(col: str) -> Column:
+    """Percent-decode a `_metadata` path segment back to the raw name.
+
+    Bare `url_decode` is form decoding and turns `+` into a space; a
+    literal `+` is never escaped in a URI path, so it is protected as
+    `%2B` first and decodes back to itself.
+    """
+    return F.url_decode(F.replace(F.col(col), F.lit("+"), F.lit("%2B")))
+
+
+def read_csv_file_metadata(spark: SparkSession, path: str) -> DataFrame:
+    """`file_lines` over a text scan of a CSV directory: files are read
+    line-wise, not parsed, and carry their identity to the per-file
+    counts downstream.
+    """
+    return file_lines(spark.read.format("text").load(path))
 
 
 def read_csv_stream(

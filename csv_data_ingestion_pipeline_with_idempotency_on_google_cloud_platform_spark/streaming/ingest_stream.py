@@ -11,58 +11,27 @@ Exactly-once effect: the checkpoint guarantees each file is admitted to
 exactly one batch per query lifetime, and inside the batch the
 idempotency anti-join (F2) re-gates against the ledger — so even a
 restart-with-reprocessed-batch appends no duplicate `done` rows. This
-strictly improves on the reference's at-least-once + TOCTOU-window
-semantics (SURVEY §3.2).
+improves on the reference's at-least-once + TOCTOU-window semantics
+(SURVEY §3.2) for a single writer; a concurrent batch ingest on the same
+ledger is not fenced out.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions.keys import upload_id_col
+from ..operators.ingest import file_facts, plan_transitions
 from ..operators.ledger import read_ledger, upsert_append
-from ..operators.ingest import MIN_DATA_ROWS, terminal_upload_ids
+from ..sources.csv_source import file_lines
 
 
 def _process_batch(spark: SparkSession, batch: DataFrame, ledger_dir: str) -> None:
-    """Per-micro-batch ingest: same dataflow as operators.ingest, driven
-    from the streaming file source's per-line rows."""
-    per_file = (
-        batch.filter(F.lower(F.col("file_name")).endswith(".csv"))
-        .groupBy("bucket_name", "file_name", "file_size", "time_created")
-        .agg(F.count("*").alias("n_lines"))
-        .withColumn(
-            "upload_id",
-            upload_id_col("bucket_name", "file_name", "file_size", "time_created"),
-        )
-        .withColumn("data_rows", F.greatest(F.col("n_lines") - 1, F.lit(0)))
-    )
-    # same gate as the batch path: skip `done` (F2) AND retry-exhausted
-    # uploads (E2 DLQ cap) — without the exhausted side, a permanently
-    # failing file would append a `failed` row on every query lifetime
-    # that re-lists it, violating the reference's 5-attempt policy.
-    skip = terminal_upload_ids(read_ledger(spark, ledger_dir))
-    fresh = per_file.join(F.broadcast(skip), "upload_id", "left_anti")
-    ok = F.col("data_rows") >= MIN_DATA_ROWS
-    now = F.current_timestamp()
-    transitions = fresh.select(
-        "upload_id",
-        "bucket_name",
-        "file_name",
-        "file_size",
-        F.when(ok, F.lit("done")).otherwise(F.lit("failed")).alias("status"),
-        now.alias("queued_at"),
-        now.alias("processing_started_at"),
-        F.when(ok, now).alias("processing_completed_at"),
-        F.when(~ok, now).alias("failed_at"),
-        F.when(
-            ~ok, F.concat(F.lit("CSV file has no data rows: "), F.col("file_name"))
-        ).alias("error_message"),
-        F.when(ok, F.col("n_lines")).alias("lines_processed"),
-        now.alias("ts"),
-    )
-    upsert_append(transitions, ledger_dir)
+    """Per-micro-batch ingest: the batch path's dataflow over one
+    micro-batch's per-line rows. The gate also skips DLQ-terminal
+    uploads, so a permanently failing file re-listed by each new query
+    lifetime stops at the reference's 5-attempt policy."""
+    per_file = file_facts(batch)
+    upsert_append(plan_transitions(per_file, read_ledger(spark, ledger_dir)), ledger_dir)
 
 
 def start_ingest_stream(
@@ -75,21 +44,13 @@ def start_ingest_stream(
     """Start the event-driven ingest query; returns the StreamingQuery.
 
     Reads line-wise with the text source + `_metadata` so per-file
-    identity (name/size/mtime) travels with every line — the streaming
-    twin of sources.csv_source.read_csv_file_metadata.
+    identity (name/size/mtime) travels with every line — the same
+    `csv_source.file_lines` projection the batch scan uses.
     """
-    lines = (
+    lines = file_lines(
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .load(csv_dir)
-        .select(
-            F.col("_metadata.file_path").alias("full_path"),
-            F.col("_metadata.file_name").alias("file_name"),
-            F.col("_metadata.file_size").alias("file_size"),
-            F.col("_metadata.file_modification_time").alias("time_created"),
-            F.col("value").alias("line"),
-        )
-        .withColumn("bucket_name", F.element_at(F.split(F.col("full_path"), "/"), -2))
     )
 
     return (

@@ -195,3 +195,46 @@ def test_read_csv_dir_infers_schema_without_one(spark, tmp_path):
     df = read_csv_dir(spark, str(d))
     assert df.schema["id"].dataType.typeName() in ("integer", "long")
     assert df.count() == 2
+
+
+@pytest.mark.parametrize("path", ["batch", "stream"])
+def test_names_are_stored_raw_not_uri_encoded(spark, tmp_path, path):
+    """`_metadata` paths are URI-encoded; the ledger must hold the raw
+    bucket and file names, and upload_id must hash the raw identity
+    exactly as the reference does (main.py:15-18)."""
+    import hashlib
+    import os
+    from datetime import datetime, timezone
+
+    from csv_data_ingestion_pipeline_with_idempotency_on_google_cloud_platform_spark.streaming import (
+        start_ingest_stream,
+    )
+
+    bucket = "my bucket"
+    d = tmp_path / bucket
+    d.mkdir()
+    names = ["a b.csv", "a+b.csv", "50%.csv", "x%20y.csv", "café ü.csv"]
+    mtime = 1_700_000_000
+    expected = {}
+    for name in names:
+        p = d / name
+        p.write_text(GOOD_CSV)
+        os.utime(p, (mtime, mtime))
+        iso = datetime.fromtimestamp(mtime, timezone.utc).strftime("%Y-%m-%dT%H:%M:%S")
+        key = f"{bucket}-{name}-{p.stat().st_size}-{iso}"
+        expected[name] = hashlib.sha256(key.encode("utf-8")).hexdigest()[:16]
+
+    ledger_dir = str(tmp_path / "ledger")
+    if path == "batch":
+        ingest_batch(spark, str(d), ledger_dir)
+    else:
+        q = start_ingest_stream(spark, str(d), ledger_dir, str(tmp_path / "ckpt"))
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    rows = read_ledger(spark, ledger_dir).collect()
+    assert {r["bucket_name"] for r in rows} == {bucket}
+    assert {r["file_name"]: r["upload_id"] for r in rows} == expected
+    assert {r["status"] for r in rows} == {"done"}

@@ -16,11 +16,14 @@ from csv_data_ingestion_pipeline_with_idempotency_on_google_cloud_platform_spark
 from .conftest import SF_DIR
 
 
-def _plan(spark, name: str) -> str:
-    df = QUERIES[name](spark, SF_DIR)
+def _explain(spark, df) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+def _plan(spark, name: str) -> str:
+    return _explain(spark, QUERIES[name](spark, SF_DIR))
 
 
 def test_csv_scan_pushdown_and_pruning(spark):
@@ -1397,3 +1400,53 @@ def test_embedding_distance_profile_windows_are_narrow(spark):
     # vectors attach via a broadcast hash join, never a shuffled join
     # of the full table against the sample
     assert "BroadcastHashJoin" in plan
+
+
+def _written_ledger(spark, tmp_path):
+    from csv_data_ingestion_pipeline_with_idempotency_on_google_cloud_platform_spark.operators.ingest import (
+        ingest_batch,
+    )
+
+    bucket = tmp_path / "bucket"
+    bucket.mkdir()
+    (bucket / "good.csv").write_text("id\n1\n")
+    (bucket / "bad.csv").write_text("id\n")
+    ledger_dir = str(tmp_path / "ledger")
+    ingest_batch(spark, str(bucket), ledger_dir)
+    return str(bucket), ledger_dir
+
+
+def test_ingest_gate_shuffles_ledger_once(spark, tmp_path):
+    """The gate's `done` and DLQ-cap conditions come from one
+    aggregation: a single hash exchange on upload_id, broadcast into the
+    anti-join."""
+    from csv_data_ingestion_pipeline_with_idempotency_on_google_cloud_platform_spark.operators.ingest import (
+        file_facts,
+        plan_transitions,
+    )
+    from csv_data_ingestion_pipeline_with_idempotency_on_google_cloud_platform_spark.operators.ledger import (
+        read_ledger,
+    )
+    from csv_data_ingestion_pipeline_with_idempotency_on_google_cloud_platform_spark.sources.csv_source import (
+        read_csv_file_metadata,
+    )
+
+    bucket, ledger_dir = _written_ledger(spark, tmp_path)
+    gate = plan_transitions(
+        file_facts(read_csv_file_metadata(spark, bucket)), read_ledger(spark, ledger_dir)
+    )
+    plan = _explain(spark, gate)
+    assert "BroadcastHashJoin LeftAnti" in plan
+    assert plan.count("hashpartitioning(upload_id") == 1
+
+
+def test_ledger_point_lookup_is_shuffle_free_top1(spark, tmp_path):
+    from csv_data_ingestion_pipeline_with_idempotency_on_google_cloud_platform_spark.operators.ledger import (
+        point_lookup,
+        read_ledger,
+    )
+
+    _, ledger_dir = _written_ledger(spark, tmp_path)
+    plan = _explain(spark, point_lookup(read_ledger(spark, ledger_dir), "0123456789abcdef"))
+    assert "TakeOrderedAndProject" in plan
+    assert "Exchange" not in plan

@@ -231,3 +231,74 @@ def test_cohort_retention_matches_bruteforce_property(spark):
         assert got == expected, (got, expected)
 
     inner()
+
+
+STATUSES = ("pending", "processing", "done", "failed")
+# `failed` drawn about half the time so uploads reach the DLQ cap often
+TRANSITION_LOGS = st.lists(
+    st.lists(st.sampled_from(STATUSES) | st.just("failed"), min_size=1, max_size=8),
+    min_size=1,
+    max_size=5,
+)
+
+
+def _transition_ledger(spark, logs, order):
+    """LEDGER_SCHEMA rows: upload u{i} gets one row per status in
+    logs[i]; `order` gives every row a distinct ts, unrelated to the
+    row's position in its upload's log."""
+    from datetime import datetime, timedelta
+
+    from csv_data_ingestion_pipeline_with_idempotency_on_google_cloud_platform_spark.schemas import (
+        LEDGER_SCHEMA,
+    )
+
+    base = datetime(2024, 5, 1)
+    flat = [(f"u{i}", s) for i, log in enumerate(logs) for s in log]
+    rows = [
+        (uid, "bkt", f"{uid}.csv", 10, status, None, None, None, None, None, None,
+         base + timedelta(seconds=order[j]))
+        for j, (uid, status) in enumerate(flat)
+    ]
+    return spark.createDataFrame(rows, LEDGER_SCHEMA)
+
+
+@SLOW
+@given(logs=TRANSITION_LOGS, data=st.data())
+def test_terminal_gate_and_point_lookup_match_latest_wins(spark, logs, data):
+    """The one-aggregation gate equals its two-aggregation definition
+    (latest `done` ∪ failed count at the DLQ cap), and the top-1
+    `point_lookup` equals `latest_wins` filtered to the key, for every
+    present key and a missing one."""
+    from pyspark.sql import functions as F
+
+    from csv_data_ingestion_pipeline_with_idempotency_on_google_cloud_platform_spark.operators.ingest import (
+        terminal_upload_ids,
+    )
+    from csv_data_ingestion_pipeline_with_idempotency_on_google_cloud_platform_spark.operators.ledger import (
+        latest_wins,
+        point_lookup,
+    )
+    from csv_data_ingestion_pipeline_with_idempotency_on_google_cloud_platform_spark.schemas import (
+        MAX_DELIVERY_ATTEMPTS,
+    )
+
+    n_rows = sum(len(log) for log in logs)
+    order = data.draw(st.permutations(range(n_rows)))
+    ledger = _transition_ledger(spark, logs, order)
+
+    done = latest_wins(ledger).filter(F.col("status") == "done").select("upload_id")
+    exhausted = (
+        ledger.filter(F.col("status") == "failed")
+        .groupBy("upload_id")
+        .agg(F.count("*").alias("n"))
+        .filter(F.col("n") >= MAX_DELIVERY_ATTEMPTS)
+        .select("upload_id")
+    )
+    expected = {r["upload_id"] for r in done.unionByName(exhausted).collect()}
+    got = [r["upload_id"] for r in terminal_upload_ids(ledger).collect()]
+    assert len(got) == len(set(got)) and set(got) == expected, (logs, order)
+
+    current = {r["upload_id"]: r.asDict() for r in latest_wins(ledger).collect()}
+    for uid in [f"u{i}" for i in range(len(logs))] + ["missing"]:
+        want = [current[uid]] if uid in current else []
+        assert [r.asDict() for r in point_lookup(ledger, uid).collect()] == want, uid
